@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
 
-import graft.ops.{Decontaminate, Dedup, Similarity, TextAnalysis}
+import graft.ops.{Dedup, Similarity, TextAnalysis}
 import graft.spark.functions._
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -1039,7 +1039,7 @@ object SparkEntry {
       val docs = read(s, dir, "documents")
       val bench = docs.filter(F.col("doc_id") % 97 === 0)
         .select(F.array_join(
-          F.slice(graft.ops.Decontaminate.tokens(F.col("text")), 5, 20), " ")
+          F.slice(graft.ops.TextAnalysis.tokens(F.col("text")), 5, 20), " ")
           .as("bench_text"))
       graft.ops.Decontaminate.overlapHits(docs, "doc_id", "text",
           bench, "bench_text", n = 8)
@@ -1058,7 +1058,7 @@ object SparkEntry {
       // free tokens expression inside the chunk lambda re-tokenizes the
       // document per chunk (the duplicateSpans CollapseProject lesson)
       val chunks = F.flatten(F.transform(
-        F.array(graft.ops.Decontaminate.tokens(F.col("text"))), w =>
+        F.array(graft.ops.TextAnalysis.tokens(F.col("text"))), w =>
           F.when(F.size(w) > 0,
             F.transform(
               F.sequence(F.lit(1), F.ceil(F.size(w) / F.lit(10.0)).cast("int")),
@@ -1145,7 +1145,7 @@ object SparkEntry {
     "sequence_pack" -> ((s, dir) => {
       val docs = read(s, dir, "documents")
         .select(F.col("doc_id"),
-          F.size(graft.ops.Decontaminate.tokens(F.col("text"))).as("n_tokens"))
+          F.size(graft.ops.TextAnalysis.tokens(F.col("text"))).as("n_tokens"))
       graft.ops.Sequencing.packSequences(docs, "doc_id", "n_tokens",
         capacity = 2048, bucketWidth = 100)
         .orderBy("doc_id")
@@ -1498,7 +1498,7 @@ object SparkEntry {
       // which falls into shingles' token-set fallback the oracle does
       // not model
       val docs = read(s, dir, "documents").filter(F.col("doc_id") < 100)
-        .filter(F.size(Decontaminate.tokens(F.col("text"))) >= 3)
+        .filter(F.size(TextAnalysis.tokens(F.col("text"))) >= 3)
         .select(F.col("doc_id"), F.col("text"))
       val mutated = docs.select((F.col("doc_id") + 100000).as("doc_id"),
         F.concat(F.col("text"), F.lit(" tailmarker")).as("text"))
@@ -1539,7 +1539,7 @@ object SparkEntry {
     // out of both sides.
     "simhash_dups_exact" -> ((s, dir) => {
       val base = read(s, dir, "documents").filter(F.col("doc_id") < 120)
-        .filter(F.size(Decontaminate.tokens(F.col("text"))) >= 1)
+        .filter(F.size(TextAnalysis.tokens(F.col("text"))) >= 1)
         .select(F.col("doc_id"), F.col("text"))
       val mutated = base.select((F.col("doc_id") + 100000).as("doc_id"),
         F.concat(F.col("text"), F.lit(" tailmarker")).as("text"))

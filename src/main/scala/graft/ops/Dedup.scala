@@ -106,12 +106,15 @@ object Dedup {
     // ever built; replacing the measured-hot array_join/slice string
     // builder + murmur64-of-string with straight long arithmetic). Same
     // 64-bit collision tradeoff as before — the identity was already
-    // hash-only; only the hash construction changed. verifyByText still
-    // builds gram strings: that mode exists precisely to carry the text.
+    // hash-only; only the hash construction changed. Its positions are
+    // TextOps.tokens positions — the rule of the Column tokens below and
+    // of cutSpans, so a span always cuts the tokens it names.
+    // verifyByText still builds gram strings: that mode exists precisely
+    // to carry the text.
     lazy val hashedOnly = df.select(F.col(idCol).as("__id"),
         F.posexplode(graft.ops.TextAnalysis.gram_hashes(F.col(textCol), l))
           .as(Seq("__p", "__h")))
-    val toks = Decontaminate.tokens(F.col(textCol))
+    val toks = TextAnalysis.tokens(F.col(textCol))
     // (verify mode) Build every (position, gram) struct inside ONE
     // generator, with the token array bound to a lambda variable via the
     // single-element outer transform — a plain `toks.as("__t")` alias
@@ -180,7 +183,7 @@ object Dedup {
         F.explode(F.sequence(F.col("span_start").cast("long"),
           F.col("span_end").cast("long"))).as("__p"))
     val toks = df.select(F.col(idCol).as("__id"),
-        F.posexplode(Decontaminate.tokens(F.col(textCol)))
+        F.posexplode(TextAnalysis.tokens(F.col(textCol)))
           .as(Seq("__p", "__tok")))
       .withColumn("__p", F.col("__p").cast("long"))
     val kept = toks.join(cut, Seq("__id", "__p"), "left_anti")
@@ -189,7 +192,7 @@ object Dedup {
           F.struct(F.col("__p"), F.col("__tok")))).getField("__tok"), " ")
         .as("__scrubbed"),
         F.count(F.lit(1)).as("__n_kept"))
-    val nTok = F.size(Decontaminate.tokens(df(textCol))).cast("long")
+    val nTok = F.size(TextAnalysis.tokens(df(textCol))).cast("long")
     df.join(kept, df(idCol) === kept("__id"), "left")
       .select(df.columns.map(c =>
         if (c == textCol) F.coalesce(F.col("__scrubbed"), F.lit("")).as(textCol)
@@ -418,7 +421,7 @@ object Dedup {
     require(n >= 1, "shingle width must be >= 1")
     require(threshold > 0 && threshold <= 1, "threshold must be in (0, 1]")
     // Shingle IDENTITY = 64-bit order-sensitive chain hash
-    // (TextOps.shingleHashes; Decontaminate-tokenization semantics, one
+    // (TextOps.shingleHashes; TextOps.tokens tokenization, one
     // codegen'd pass, distinct within the document) — never the shingle
     // STRING. Everything downstream (frequency count, rarity sort,
     // prefix join keys, the verify intersection) then moves 8-byte longs
@@ -622,7 +625,7 @@ object Dedup {
     * (any two documents share the high-frequency word types, so an
     * order-insensitive vote puts ~15% of ALL pairs within hamming 3 —
     * quadratic output; measured in the r5 scale run, BENCH.md).
-    * `shingleSize = 1` keeps the legacy unigram signature
+    * `shingleSize = 1` is the legacy unigram signature
     * (TextOps.simhash64, golden-pinned). */
   def simhashPairs(
       df: DataFrame,
@@ -630,11 +633,9 @@ object Dedup {
       textCol: String,
       maxHamming: Int = 3,
       shingleSize: Int = 3): DataFrame = {
-    val sig =
-      if (shingleSize <= 1) TextAnalysis.simhash64(F.col(textCol))
-      else TextAnalysis.simhash_ngram64(F.col(textCol), shingleSize)
     simhashPairsFromSig(
-      df.select(F.col(idCol), sig.as("__sim")),
+      df.select(F.col(idCol),
+        TextAnalysis.simhash_ngram64(F.col(textCol), shingleSize).as("__sim")),
       idCol, "__sim", maxHamming)
   }
 

@@ -9,7 +9,10 @@ import org.apache.spark.sql.graft.ColumnBridge.{column, expression}
   */
 object TextAnalysis {
 
-  def simhash64(c: Column): Column = column(SimHash64(expression(c)))
+  /** Tokens of `c` by [[TextOps.tokens]] (runs of non-`\s` characters),
+    * as array<string> — the one Column-level tokenizer of the library. */
+  def tokens(c: Column): Column = column(Tokens(expression(c)))
+  def simhash64(c: Column): Column = simhash_ngram64(c, 1)
   def simhash_ngram64(c: Column, width: Int = 3): Column =
     column(SimHashNgram64(expression(c), width))
   def minhash_sig(c: Column, numHashes: Int = 64, shingleSize: Int = 3): Column =
@@ -23,15 +26,16 @@ object TextAnalysis {
   def jaccard_shingles(a: Column, b: Column, shingleSize: Int = 3): Column =
     column(JaccardShingles(expression(a), expression(b), shingleSize))
 
-  /** A 60-bit SimHash over DISTINCT non-empty whitespace tokens whose
-    * per-token hash is the first 15 hex chars of md5 — every step is a
+  /** A 60-bit SimHash over DISTINCT [[tokens]] whose per-token hash is
+    * the first 15 hex chars of md5 — every step past tokenization is a
     * Spark built-in AND plain ANSI SQL, so a DuckDB oracle can recompute
-    * the signature bit-for-bit. Exists to give the SimHash pair machinery
-    * an exact-oracle regime (`simhash_dups_exact`); production signatures
-    * stay [[simhash64]] (murmur-based, golden-pinned). Zero-token input
-    * yields signature 0. */
+    * the signature bit-for-bit (its `string_split(text, ' ')` agrees with
+    * [[tokens]] on text without tabs, newlines or control characters).
+    * Exists to give the SimHash pair machinery an exact-oracle regime
+    * (`simhash_dups_exact`); production signatures stay [[simhash64]]
+    * (murmur-based, golden-pinned). Zero-token input yields signature 0. */
   def simhash60Md5(c: Column): Column = {
-    val toks = F.array_distinct(F.filter(F.split(c, " "), t => t =!= F.lit("")))
+    val toks = F.array_distinct(tokens(c))
     val hashes = F.transform(toks, t =>
       F.conv(F.substring(F.md5(t.cast("binary")), 1, 15), 16, 10).cast("long"))
     val masks = F.array((0 until 60).map(b => F.lit(1L << b)): _*)
@@ -75,8 +79,7 @@ object TextAnalysis {
     import graft.spark.functions.top_k_by
     require(k >= 1, "k must be >= 1")
     val toks = df
-      .select(F.col(idCol), F.explode(F.split(F.col(textCol), " ")).as("__term"))
-      .filter(F.col("__term") =!= "")
+      .select(F.col(idCol), F.explode(tokens(F.col(textCol))).as("__term"))
     val tf = toks.groupBy(F.col(idCol), F.col("__term"))
       .agg(F.count(F.lit(1)).as("__tf"))
     // (doc, term) rows are distinct in tf, so df(term) = count(*)
@@ -107,7 +110,7 @@ object TextAnalysis {
   def repetitionSignals(df: DataFrame, idCol: String, textCol: String,
       chunkTokens: Int = 10): DataFrame = {
     require(chunkTokens >= 1, "chunkTokens must be >= 1")
-    val w = Decontaminate.tokens(F.col(textCol))
+    val w = tokens(F.col(textCol))
     val base = df.select(F.col(idCol), w.as("__w"))
 
     val chunks = F.when(F.size(F.col("__w")) > 0,

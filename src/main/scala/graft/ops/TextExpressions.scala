@@ -1,7 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
@@ -17,21 +17,88 @@ import graft.core.hash.Murmur2Kernel
   */
 object TextOps {
 
-  @inline def tokens(s: String): Array[String] = {
-    val t = s.trim
-    if (t.isEmpty) Array.empty else t.split("\\s+")
+  /** Java's `\s`: space, \t, \n, \x0B, \f, \r. */
+  @inline private def isSpace(c: Char): Boolean = c == ' ' || (c >= '\t' && c <= '\r')
+
+  /** The tokenizer of every text hash and of the Column-level
+    * [[TextAnalysis.tokens]]: the maximal runs of characters outside
+    * Java's `\s` (`[ \t\n\x0B\f\r]`), in order — exactly
+    * `s.split("\\s+").filter(_.nonEmpty)`, in one scan with no regex.
+    * Other control characters and non-ASCII spaces (NBSP) stay inside
+    * tokens. */
+  def tokens(s: String): Array[String] = {
+    val out = Array.newBuilder[String]
+    val len = s.length
+    var i = 0
+    while (i < len) {
+      while (i < len && isSpace(s.charAt(i))) i += 1
+      val start = i
+      while (i < len && !isSpace(s.charAt(i))) i += 1
+      if (i > start) out += s.substring(start, i)
+    }
+    out.result()
   }
 
-  /** 64-bit SimHash over murmur-hashed tokens: per-bit majority vote of
-    * token hashes (Charikar 2002). Near-duplicate texts land within a
-    * small Hamming distance. */
-  def simhash64(s: String): Long = {
+  /** murmur64 of each token's UTF-8 bytes, in token order. */
+  private def tokenHashes(s: String): Array[Long] = {
     val toks = tokens(s)
-    if (toks.isEmpty) return 0L
+    val th = new Array[Long](toks.length)
+    var t = 0
+    while (t < th.length) {
+      th(t) = Murmur2Kernel.hash64(ByteOps.utf8(toks(t)))
+      t += 1
+    }
+    th
+  }
+
+  /** Shingle identity: the order-sensitive fmix64 chain of the token
+    * hashes of each `w`-token window, one per start position, duplicates
+    * kept; empty when there are fewer than `w` tokens. A width-1 chain
+    * is the token hash itself. */
+  private def chains(th: Array[Long], w: Int): Array[Long] = {
+    if (th.length < w) return Array.emptyLongArray
+    val out = new Array[Long](th.length - w + 1)
+    var start = 0
+    while (start < out.length) {
+      var base = th(start)
+      var j = 1
+      while (j < w) {
+        base = graft.sketch.HllSketch.fmix64(base ^ (th(start + j) * 0xc4ceb9fe1a85ec53L))
+        j += 1
+      }
+      out(start) = base
+      start += 1
+    }
+    out
+  }
+
+  /** Insertion-ordered distinct of `hs` through an open-addressed long
+    * table (0 = empty slot, so a zero hash is remapped first). Reuses
+    * `hs` for the output. */
+  private def distinctNonZero(hs: Array[Long]): Array[Long] = {
+    var cap = 4
+    while (cap < hs.length * 2) cap <<= 1
+    val table = new Array[Long](cap)
+    val mask = cap - 1
+    var m = 0
+    var i = 0
+    while (i < hs.length) {
+      val h = if (hs(i) == 0L) 0x1b873593L else hs(i)
+      var slot = ((h ^ (h >>> 32)).toInt) & mask
+      while (table(slot) != 0L && table(slot) != h) slot = (slot + 1) & mask
+      if (table(slot) == 0L) { table(slot) = h; hs(m) = h; m += 1 }
+      i += 1
+    }
+    if (m == hs.length) hs else java.util.Arrays.copyOf(hs, m)
+  }
+
+  /** Per-bit majority vote of 64-bit feature hashes (Charikar 2002); 0
+    * for no features. */
+  private def simhashVote(hs: Array[Long]): Long = {
     val votes = new Array[Int](64)
     var i = 0
-    while (i < toks.length) {
-      val h = Murmur2Kernel.hash64(toks(i))
+    while (i < hs.length) {
+      val h = hs(i)
       var b = 0
       while (b < 64) {
         if (((h >>> b) & 1L) == 1L) votes(b) += 1 else votes(b) -= 1
@@ -48,6 +115,11 @@ object TextOps {
     out
   }
 
+  /** 64-bit SimHash over murmur-hashed tokens: the unigram case of
+    * [[simhashNgram64]]. Near-duplicate texts land within a small
+    * Hamming distance. */
+  def simhash64(s: String): Long = simhashNgram64(s, 1)
+
   /** 64-bit SimHash over order-sensitive token n-grams — the production
     * near-dup signature. Unigram SimHash ([[simhash64]]) collapses on
     * natural-language corpora: Zipf's law means any two documents share
@@ -58,44 +130,12 @@ object TextOps {
     * quadratic output at scale). N-gram features are order-sensitive,
     * so documents sharing vocabulary but not phrasing decorrelate, while
     * lightly mutated near-copies still share most n-grams (Manku et al.
-    * 2007 hash weighted features for the same reason). The n-gram hash
-    * is minhashSignature's fmix chain over per-token murmur hashes —
-    * string-free past tokenization. */
+    * 2007 hash weighted features for the same reason). The votes are
+    * over [[gramHashes]]' positional chains (width 1 for a document
+    * shorter than `width`) — string-free past tokenization. */
   def simhashNgram64(s: String, width: Int): Long = {
-    val toks = tokens(s)
-    val n = toks.length
-    if (n == 0) return 0L
-    val w = if (n < width) 1 else width
-    val th = new Array[Long](n)
-    var t = 0
-    while (t < n) {
-      th(t) = Murmur2Kernel.hash64(ByteOps.utf8(toks(t)))
-      t += 1
-    }
-    val votes = new Array[Int](64)
-    var start = 0
-    val nShingles = n - w + 1
-    while (start < nShingles) {
-      var base = th(start)
-      var j = 1
-      while (j < w) {
-        base = graft.sketch.HllSketch.fmix64(base ^ (th(start + j) * 0xc4ceb9fe1a85ec53L))
-        j += 1
-      }
-      var b = 0
-      while (b < 64) {
-        if (((base >>> b) & 1L) == 1L) votes(b) += 1 else votes(b) -= 1
-        b += 1
-      }
-      start += 1
-    }
-    var out = 0L
-    var b = 0
-    while (b < 64) {
-      if (votes(b) > 0) out |= (1L << b)
-      b += 1
-    }
-    out
+    val th = tokenHashes(s)
+    simhashVote(chains(th, if (th.length < width) 1 else width))
   }
 
   /** k-min-hash signature over token shingles (Broder 1997): element i is
@@ -112,76 +152,37 @@ object TextOps {
     * full murmur runs per shingle; recall/precision tests are unchanged
     * — any well-mixed family passes them.)
     *
-    * Hot path of the minhash-LSH dedup pipeline (one call per document).
-    * The whole loop is string-free past tokenization: each token is
-    * murmur-hashed ONCE, a shingle's identity is the order-sensitive
-    * fmix64-chain of its token hashes (a 2^-64 identity collision merely
-    * merges two shingles), and shingle dedup runs through a primitive
-    * open-addressed long table — jstack sampling of the earlier
-    * string-shingle version showed shingle-string/Set building
-    * dominating the murmur work it fed. */
+    * The shingles are `shingleHashes(s, shingleSize, tokenFallback =
+    * true)` — the very set minhashLshPairs' exact verify intersects, so
+    * the signature and its verify cannot disagree on what a shingle is.
+    * The whole loop is string-free past tokenization (jstack sampling
+    * of an earlier string-shingle version showed shingle-string/Set
+    * building dominating the murmur work it fed). */
   def minhashSignature(s: String, numHashes: Int, shingleSize: Int): Array[Long] = {
     val sig = Array.fill(numHashes)(Long.MaxValue)
-    val toks = tokens(s)
-    val n = toks.length
-    if (n == 0) return sig
-    val th = new Array[Long](n)
-    var t = 0
-    while (t < n) {
-      th(t) = Murmur2Kernel.hash64(ByteOps.utf8(toks(t)))
-      t += 1
-    }
-    val width = if (n < shingleSize) 1 else shingleSize
-    val nShingles = n - width + 1
-    // open-addressed dedup table (0 = empty; a zero hash is remapped)
-    var cap = 4
-    while (cap < nShingles * 2) cap <<= 1
-    val table = new Array[Long](cap)
-    val mask = cap - 1
-    var start = 0
-    while (start < nShingles) {
-      var base = th(start)
-      var j = 1
-      while (j < width) {
-        base = graft.sketch.HllSketch.fmix64(base ^ (th(start + j) * 0xc4ceb9fe1a85ec53L))
-        j += 1
+    val sh = shingleHashes(s, shingleSize, tokenFallback = true)
+    var k = 0
+    while (k < sh.length) {
+      var i = 0
+      while (i < numHashes) {
+        val h = graft.sketch.HllSketch.fmix64(sh(k) ^ ((i + 1) * 0x9e3779b97f4a7c15L))
+        if (h < sig(i)) sig(i) = h
+        i += 1
       }
-      if (base == 0L) base = 0x1b873593L
-      // probe: insert if absent
-      var slot = ((base ^ (base >>> 32)).toInt) & mask
-      var state = 0 // 0 = probing, 1 = fresh, 2 = duplicate
-      while (state == 0) {
-        val cur = table(slot)
-        if (cur == 0L) { table(slot) = base; state = 1 }
-        else if (cur == base) state = 2
-        else slot = (slot + 1) & mask
-      }
-      if (state == 1) {
-        var i = 0
-        while (i < numHashes) {
-          val h = graft.sketch.HllSketch.fmix64(base ^ ((i + 1) * 0x9e3779b97f4a7c15L))
-          if (h < sig(i)) sig(i) = h
-          i += 1
-        }
-      }
-      start += 1
+      k += 1
     }
     sig
   }
 
-  /** Distinct `width`-token shingle IDENTITY HASHES of `s` (Decontaminate
-    * tokenization: split on single space, drop empties), empty when the
-    * document has fewer than `width` tokens. A shingle's identity is the
-    * order-sensitive fmix64 chain of its per-token murmur hashes — the
-    * SAME construction [[minhashSignature]] and [[simhashNgram64]] use —
-    * so no shingle string is ever materialized: the prefix-filter dedup
+  /** Distinct `width`-token shingle IDENTITY HASHES of `s`: the
+    * insertion-ordered distinct set of [[gramHashes]]' chains, zero
+    * remapped; empty when the document has fewer than `width` tokens.
+    * No shingle string is ever materialized: the prefix-filter dedup
     * pipeline (Dedup.ngramPrefixCandidates) does all its frequency
     * counting, rarity ordering and intersection arithmetic on 8-byte
     * longs instead of ~30-byte strings. A 2^-64 identity collision would
     * merge two shingles — the same documented tradeoff as
     * [[graft.ops.Dedup.exactDedup]] / duplicateSpans' hash-only grams.
-    * Insertion-ordered distinct via an open-addressed long table (0 =
-    * empty; a zero hash is remapped, as in [[minhashSignature]]).
     *
     * `tokenFallback = true` mirrors [[shingles]]' short-document rule:
     * a document with fewer than `width` tokens contributes its DISTINCT
@@ -193,102 +194,20 @@ object TextOps {
     * contain the space an n-gram string always has); same accepted
     * tradeoff as every hash identity here. */
   def shingleHashes(s: String, width: Int, tokenFallback: Boolean = false): Array[Long] = {
-    // Decontaminate.tokens semantics: split on the single space char,
-    // drop empty segments (tabs/newlines stay inside tokens)
-    val toks = {
-      val out = scala.collection.mutable.ArrayBuffer[String]()
-      var i = 0
-      val len = s.length
-      while (i < len) {
-        var j = i
-        while (j < len && s.charAt(j) != ' ') j += 1
-        if (j > i) out += s.substring(i, j)
-        i = j + 1
-      }
-      out
-    }
-    val n = toks.length
-    if (n < width && !tokenFallback) return Array.emptyLongArray
-    val th = new Array[Long](n)
-    var t = 0
-    while (t < n) {
-      th(t) = Murmur2Kernel.hash64(ByteOps.utf8(toks(t)))
-      t += 1
-    }
-    // short-doc fallback: width-1 "shingles" = the tokens themselves
-    val w = if (n < width) 1 else width
-    val nShingles = n - w + 1
-    if (nShingles <= 0) return Array.emptyLongArray
-    var cap = 4
-    while (cap < nShingles * 2) cap <<= 1
-    val table = new Array[Long](cap)
-    val mask = cap - 1
-    val out = new Array[Long](nShingles)
-    var m = 0
-    var start = 0
-    while (start < nShingles) {
-      var base = th(start)
-      var j = 1
-      while (j < w) {
-        base = graft.sketch.HllSketch.fmix64(base ^ (th(start + j) * 0xc4ceb9fe1a85ec53L))
-        j += 1
-      }
-      if (base == 0L) base = 0x1b873593L
-      var slot = ((base ^ (base >>> 32)).toInt) & mask
-      var state = 0
-      while (state == 0) {
-        val cur = table(slot)
-        if (cur == 0L) { table(slot) = base; state = 1 }
-        else if (cur == base) state = 2
-        else slot = (slot + 1) & mask
-      }
-      if (state == 1) { out(m) = base; m += 1 }
-      start += 1
-    }
-    if (m == out.length) out else java.util.Arrays.copyOf(out, m)
+    val th = tokenHashes(s)
+    if (th.length >= width) distinctNonZero(chains(th, width))
+    else if (tokenFallback) distinctNonZero(chains(th, 1))
+    else Array.emptyLongArray
   }
 
   /** POSITIONAL `width`-token gram identity hashes: element p is the
     * chain hash of the gram starting at token position p (0-based), one
     * element per position, duplicates KEPT — the duplicateSpans shape,
-    * where position identity matters and repeats are the signal. Same
-    * tokenization and chain construction as [[shingleHashes]]; empty
-    * array when the document has fewer than `width` tokens. */
-  def gramHashes(s: String, width: Int): Array[Long] = {
-    val toks = {
-      val out = scala.collection.mutable.ArrayBuffer[String]()
-      var i = 0
-      val len = s.length
-      while (i < len) {
-        var j = i
-        while (j < len && s.charAt(j) != ' ') j += 1
-        if (j > i) out += s.substring(i, j)
-        i = j + 1
-      }
-      out
-    }
-    val n = toks.length
-    if (n < width) return Array.emptyLongArray
-    val th = new Array[Long](n)
-    var t = 0
-    while (t < n) {
-      th(t) = Murmur2Kernel.hash64(ByteOps.utf8(toks(t)))
-      t += 1
-    }
-    val out = new Array[Long](n - width + 1)
-    var start = 0
-    while (start < out.length) {
-      var base = th(start)
-      var j = 1
-      while (j < width) {
-        base = graft.sketch.HllSketch.fmix64(base ^ (th(start + j) * 0xc4ceb9fe1a85ec53L))
-        j += 1
-      }
-      out(start) = base
-      start += 1
-    }
-    out
-  }
+    * where position identity matters and repeats are the signal. Positions
+    * are those of [[tokens]], as in the Column-level
+    * [[TextAnalysis.tokens]]; empty array when the document has fewer
+    * than `width` tokens. */
+  def gramHashes(s: String, width: Int): Array[Long] = chains(tokenHashes(s), width)
 
   def shingles(s: String, size: Int): Set[String] = {
     val toks = tokens(s)
@@ -369,69 +288,70 @@ object TextOps {
   }
 }
 
-private[ops] trait StringInOps { self: Expression =>
-  protected final def checkStringIn(dt: DataType, pretty: String): TypeCheckResult = dt match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$pretty requires a string argument, got ${other.catalogString}")
+/** The shape every text expression shares: string arguments, null in ->
+  * null out, and generated code that calls back into the expression
+  * object's `compute` over the decoded argument strings. A case class
+  * supplies its dataType, its compute and any argument checks. */
+private[ops] trait TextExpression extends Expression {
+  /** An argument check beyond the string types: a message fails analysis. */
+  protected def argError: Option[String] = None
+
+  override def nullIntolerant: Boolean = true
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    argError.map(m => TypeCheckResult.TypeCheckFailure(s"$prettyName $m"))
+      .orElse(children.map(_.dataType).collectFirst {
+        case dt if dt != StringType => TypeCheckResult.TypeCheckFailure(
+          s"$prettyName requires a string argument, got ${dt.catalogString}")
+      })
+      .getOrElse(TypeCheckResult.TypeCheckSuccess)
+
+  /** Generated call of `compute` on the children's generated values. */
+  protected final def computeCode(ctx: CodegenContext, args: String*): String = {
+    val ref = ctx.addReferenceObj("textExpr", this, getClass.getName)
+    s"(${CodeGenerator.boxedType(dataType)}) " +
+      s"$ref.compute(${args.map(a => s"$a.toString()").mkString(", ")})"
   }
 }
 
-/** `simhash64(text)` */
-case class SimHash64(child: Expression)
-    extends UnaryExpression with StringInOps {
-  override def checkInputDataTypes(): TypeCheckResult = checkStringIn(child.dataType, prettyName)
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "simhash64"
-  def compute(s: UTF8String): Long = TextOps.simhash64(s.toString)
-  override protected def nullSafeEval(v: Any): Any = compute(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("simhashExpr", this, classOf[SimHash64].getName)
-    defineCodeGen(ctx, ev, c => s"$ref.compute($c)")
-  }
-  override protected def withNewChildInternal(c: Expression): SimHash64 = copy(child = c)
+private[ops] trait UnaryTextExpression extends UnaryExpression with TextExpression {
+  def compute(s: String): Any
+  override protected def nullSafeEval(v: Any): Any = compute(v.toString)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => computeCode(ctx, c))
+}
+
+/** `tokens(text)` -> array<string>: the [[TextOps.tokens]] split, the
+  * Column-level tokenizer of every text operator. */
+case class Tokens(child: Expression) extends UnaryTextExpression {
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+  override def prettyName: String = "tokens"
+  def compute(s: String): Any =
+    new GenericArrayData(TextOps.tokens(s).map[Any](UTF8String.fromString))
+  override protected def withNewChildInternal(c: Expression): Tokens = copy(child = c)
 }
 
 /** `simhash_ngram64(text, width)` — order-sensitive n-gram SimHash (the
   * production near-dup signature; see TextOps.simhashNgram64). */
-case class SimHashNgram64(child: Expression, width: Int)
-    extends UnaryExpression with StringInOps {
-  override def checkInputDataTypes(): TypeCheckResult = {
-    if (width < 1) TypeCheckResult.TypeCheckFailure(s"$prettyName width must be >= 1")
-    else checkStringIn(child.dataType, prettyName)
-  }
+case class SimHashNgram64(child: Expression, width: Int) extends UnaryTextExpression {
+  override protected def argError: Option[String] =
+    if (width < 1) Some("width must be >= 1") else None
   override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
   override def prettyName: String = "simhash_ngram64"
-  def compute(s: UTF8String): Long = TextOps.simhashNgram64(s.toString, width)
-  override protected def nullSafeEval(v: Any): Any = compute(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("simhashNgramExpr", this, classOf[SimHashNgram64].getName)
-    defineCodeGen(ctx, ev, c => s"$ref.compute($c)")
-  }
+  def compute(s: String): Any = TextOps.simhashNgram64(s, width)
   override protected def withNewChildInternal(c: Expression): SimHashNgram64 = copy(child = c)
 }
 
 /** `minhash_sig(text, numHashes, shingleSize)` -> array<long>; the two
   * size arguments must be foldable ints. */
 case class MinHashSig(child: Expression, numHashes: Int, shingleSize: Int)
-    extends UnaryExpression with StringInOps {
-  override def checkInputDataTypes(): TypeCheckResult = {
-    if (numHashes < 1 || shingleSize < 1)
-      TypeCheckResult.TypeCheckFailure(s"$prettyName sizes must be >= 1")
-    else checkStringIn(child.dataType, prettyName)
-  }
+    extends UnaryTextExpression {
+  override protected def argError: Option[String] =
+    if (numHashes < 1 || shingleSize < 1) Some("sizes must be >= 1") else None
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
   override def prettyName: String = "minhash_sig"
-  def compute(s: UTF8String): GenericArrayData =
-    new GenericArrayData(TextOps.minhashSignature(s.toString, numHashes, shingleSize))
-  override protected def nullSafeEval(v: Any): Any = compute(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("minhashExpr", this, classOf[MinHashSig].getName)
-    defineCodeGen(ctx, ev, c => s"$ref.compute($c)")
-  }
+  def compute(s: String): Any =
+    new GenericArrayData(TextOps.minhashSignature(s, numHashes, shingleSize))
   override protected def withNewChildInternal(c: Expression): MinHashSig = copy(child = c)
 }
 
@@ -439,97 +359,52 @@ case class MinHashSig(child: Expression, numHashes: Int, shingleSize: Int)
   * n-gram identity hashes (see TextOps.shingleHashes; `tokenFallback`
   * mirrors the jaccardShingles short-document token-set rule). */
 case class ShingleHashes(child: Expression, width: Int,
-    tokenFallback: Boolean = false)
-    extends UnaryExpression with StringInOps {
-  override def checkInputDataTypes(): TypeCheckResult = {
-    if (width < 1) TypeCheckResult.TypeCheckFailure(s"$prettyName width must be >= 1")
-    else checkStringIn(child.dataType, prettyName)
-  }
+    tokenFallback: Boolean = false) extends UnaryTextExpression {
+  override protected def argError: Option[String] =
+    if (width < 1) Some("width must be >= 1") else None
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
   override def prettyName: String = "shingle_hashes"
-  def compute(s: UTF8String): GenericArrayData =
-    new GenericArrayData(TextOps.shingleHashes(s.toString, width, tokenFallback))
-  override protected def nullSafeEval(v: Any): Any = compute(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("shingleHashExpr", this, classOf[ShingleHashes].getName)
-    defineCodeGen(ctx, ev, c => s"$ref.compute($c)")
-  }
+  def compute(s: String): Any =
+    new GenericArrayData(TextOps.shingleHashes(s, width, tokenFallback))
   override protected def withNewChildInternal(c: Expression): ShingleHashes = copy(child = c)
 }
 
 /** `gram_hashes(text, width)` -> array<long>: positional n-gram identity
   * hashes, one per token position, duplicates kept (TextOps.gramHashes). */
-case class GramHashes(child: Expression, width: Int)
-    extends UnaryExpression with StringInOps {
-  override def checkInputDataTypes(): TypeCheckResult = {
-    if (width < 1) TypeCheckResult.TypeCheckFailure(s"$prettyName width must be >= 1")
-    else checkStringIn(child.dataType, prettyName)
-  }
+case class GramHashes(child: Expression, width: Int) extends UnaryTextExpression {
+  override protected def argError: Option[String] =
+    if (width < 1) Some("width must be >= 1") else None
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
   override def prettyName: String = "gram_hashes"
-  def compute(s: UTF8String): GenericArrayData =
-    new GenericArrayData(TextOps.gramHashes(s.toString, width))
-  override protected def nullSafeEval(v: Any): Any = compute(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("gramHashExpr", this, classOf[GramHashes].getName)
-    defineCodeGen(ctx, ev, c => s"$ref.compute($c)")
-  }
+  def compute(s: String): Any = new GenericArrayData(TextOps.gramHashes(s, width))
   override protected def withNewChildInternal(c: Expression): GramHashes = copy(child = c)
 }
 
 /** `fingerprint64(text)` — rolling Karp-Rabin token fingerprint. */
-case class Fingerprint64(child: Expression)
-    extends UnaryExpression with StringInOps {
-  override def checkInputDataTypes(): TypeCheckResult = checkStringIn(child.dataType, prettyName)
+case class Fingerprint64(child: Expression) extends UnaryTextExpression {
   override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
   override def prettyName: String = "fingerprint64"
-  def compute(s: UTF8String): Long = TextOps.fingerprint(s.toString)
-  override protected def nullSafeEval(v: Any): Any = compute(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("fpExpr", this, classOf[Fingerprint64].getName)
-    defineCodeGen(ctx, ev, c => s"$ref.compute($c)")
-  }
+  def compute(s: String): Any = TextOps.fingerprint(s)
   override protected def withNewChildInternal(c: Expression): Fingerprint64 = copy(child = c)
 }
 
 /** `lang_id(text)` — heuristic language code. */
-case class LangId(child: Expression)
-    extends UnaryExpression with StringInOps {
-  override def checkInputDataTypes(): TypeCheckResult = checkStringIn(child.dataType, prettyName)
+case class LangId(child: Expression) extends UnaryTextExpression {
   override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
   override def prettyName: String = "lang_id"
-  def compute(s: UTF8String): UTF8String =
-    UTF8String.fromString(TextOps.langId(s.toString))
-  override protected def nullSafeEval(v: Any): Any = compute(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("langExpr", this, classOf[LangId].getName)
-    defineCodeGen(ctx, ev, c => s"$ref.compute($c)")
-  }
+  def compute(s: String): Any = UTF8String.fromString(TextOps.langId(s))
   override protected def withNewChildInternal(c: Expression): LangId = copy(child = c)
 }
 
 /** `jaccard_shingles(a, b, size)` — exact token-shingle Jaccard. */
 case class JaccardShingles(left: Expression, right: Expression, shingleSize: Int)
-    extends BinaryExpression with StringInOps {
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val f = checkStringIn(left.dataType, prettyName)
-    if (f.isFailure) f else checkStringIn(right.dataType, prettyName)
-  }
+    extends BinaryExpression with TextExpression {
   override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
   override def prettyName: String = "jaccard_shingles"
-  def compute(a: UTF8String, b: UTF8String): Double =
-    TextOps.jaccardShingles(a.toString, b.toString, shingleSize)
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    compute(a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("jaccardExpr", this, classOf[JaccardShingles].getName)
-    defineCodeGen(ctx, ev, (a, b) => s"$ref.compute($a, $b)")
-  }
+  def compute(a: String, b: String): Any = TextOps.jaccardShingles(a, b, shingleSize)
+  override protected def nullSafeEval(a: Any, b: Any): Any = compute(a.toString, b.toString)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) => computeCode(ctx, a, b))
   override protected def withNewChildrenInternal(l: Expression, r: Expression): JaccardShingles =
     copy(left = l, right = r)
 }
